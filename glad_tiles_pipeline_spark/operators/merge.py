@@ -37,17 +37,23 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from glad_tiles_pipeline_spark.functions.hashing import bucket_col
+from glad_tiles_pipeline_spark.functions.hashing import (
+    BLOOM_MAX_ROWS,
+    bloom_positions_expr,
+    bucket_col,
+    pack_bloom,
+)
 from glad_tiles_pipeline_spark.functions.text import (
     normalize_lang,
     normalize_lang_expr,
 )
 from glad_tiles_pipeline_spark.operators.dedup import lww_dedup, lww_dedup_argmax
-from glad_tiles_pipeline_spark.plans.lake import LakeTable
+from glad_tiles_pipeline_spark.plans.lake import LakeTable, _row_schema
 
 
 # Sentinel ``offsets`` value: commit WITHOUT advancing this table's own
@@ -238,48 +244,63 @@ def _collect_bucket_entries(
     return entries, lineage
 
 
-def _attach_blooms(
-    spark: SparkSession, root: str, entries: list[dict], key1: str, key2: str
-) -> None:
-    """S27: per-file key blooms for the manifest entries just written, so
-    ``lookup`` prunes fresh (uncompacted) delta/tomb files by exact key —
-    the point-read IO lever BEFORE key-clustered compaction gives path
-    min/max stats teeth.  One extra column-pruned pass over only the
-    ELIGIBLE files (rows <= BLOOM_MAX_ROWS — per-batch-per-bucket files,
-    O(batch)); probe positions are pure JVM exprs, the driver packs at
-    most 8 KiB per file.  Big files (compaction output, CoW buckets) skip
-    the bloom: their pruning story is clustered stats, and an
-    over-capacity bloom is dead manifest weight.  dv kill lists carry no
-    keys and are skipped."""
-    import re as _re
+def _post_write_stats(
+    spark: SparkSession, table: LakeTable, entries: list[dict],
+    fields: list[dict],
+) -> list[dict]:
+    """One column-pruned read of the row files a merge-on-read batch just
+    wrote (``entries``; dv kill lists carry no keys and are skipped), with
+    their known schema, so the read plans without an inference job.  It
+    serves two consumers:
 
-    from glad_tiles_pipeline_spark.functions.hashing import (
-        BLOOM_MAX_ROWS,
-        bloom_positions_expr,
-        pack_bloom,
-    )
-
-    elig = {
-        f["path"]: f
-        for f in entries
-        if f.get("kind") != "dv" and 0 < f["rows"] <= BLOOM_MAX_ROWS
+    * S27 key blooms: each ELIGIBLE file (rows <= BLOOM_MAX_ROWS —
+      per-batch-per-bucket files, O(batch)) gets its bloom attached to its
+      manifest entry, so ``lookup`` prunes fresh (uncompacted) delta/tomb
+      files by exact key before key-clustered compaction gives path min/max
+      stats teeth.  Probe positions are pure JVM exprs; the driver packs at
+      most 8 KiB per file.  Big files skip the bloom: their pruning story is
+      clustered stats, and an over-capacity bloom is dead manifest weight.
+    * exact batch stats: the returned per-bucket ``winners`` / ``deleted``
+      / ``n_events`` rows, read back from the winner rows (~30 B each)
+      instead of a second scan of the raw batch."""
+    by_path = {
+        f["path"]: f for f in entries if f.get("kind") != "dv" and f["rows"] > 0
     }
-    if not elig:
-        return
-    src = spark.read.parquet(*[os.path.join(root, p) for p in elig])
-    rows = (
-        src.select(
-            F.input_file_name().alias("__f"),
-            F.explode(bloom_positions_expr(key1, key2)).alias("p"),
-        )
+    if not by_path:
+        return []
+    keys = sorted((f for f in fields if f["id"] in (1, 2)), key=lambda f: f["id"])
+    elig = [p for p, f in by_path.items() if f["rows"] <= BLOOM_MAX_ROWS]
+    src = spark.read.schema(_row_schema(keys)).parquet(
+        *[os.path.join(table.root, p) for p in by_path]
+    )
+    per_file = (
+        src.withColumn("__f", table._rel_path_expr())
         .groupBy("__f")
-        .agg(F.collect_set("p").alias("ps"))
+        .agg(
+            F.count("*").alias("winners"),
+            F.sum(F.col("_deleted").cast("long")).alias("deleted"),
+            F.sum("_n_src_events").alias("n_events"),
+            F.array_distinct(F.flatten(F.collect_list(
+                F.when(
+                    F.col("__f").isin(elig),
+                    bloom_positions_expr(keys[0]["name"], keys[1]["name"]),
+                )
+            ))).alias("ps"),
+        )
         .collect()
     )
-    for r in rows:
-        rel = os.path.relpath(_re.sub(r"^file:/+", "/", r["__f"]), root)
-        if rel in elig:
-            elig[rel]["bloom"] = pack_bloom(r["ps"])
+    stats: dict[int, dict] = {}
+    for r in per_file:
+        f = by_path[r["__f"]]
+        if f["rows"] <= BLOOM_MAX_ROWS:
+            f["bloom"] = pack_bloom(r["ps"])
+        s = stats.setdefault(f["bucket"], {
+            "__bucket": f["bucket"], "winners": 0, "deleted": 0, "n_events": 0,
+        })
+        s["winners"] += r["winners"]
+        s["deleted"] += r["deleted"] or 0
+        s["n_events"] += r["n_events"] or 0
+    return [stats[b] for b in sorted(stats)]
 
 
 def apply_batch(
@@ -312,18 +333,22 @@ def apply_batch(
     other's resume point.  Single-writer callers keep the implicit
     ``default`` channel and see no behavior change.
     """
+    t_start = time.perf_counter()
     already = table.batch_committed(batch_id)
     if already is not None:
         return {"snapshot_id": already, "batch_id": batch_id, "skipped": True}
 
     # -- 1. schema evolution first (control events are rare; collect is tiny)
-    controls = [
-        r.asDict()
-        for r in events.filter(F.col("control").isNotNull())
-        .select("offset", "control")
-        .orderBy("offset")
-        .collect()
-    ]
+    # (sorted on the driver: a Spark-side orderBy costs a sampling job)
+    controls = sorted(
+        (
+            r.asDict()
+            for r in events.filter(F.col("control").isNotNull())
+            .select("offset", "control")
+            .collect()
+        ),
+        key=lambda c: c["offset"],
+    )
     if controls:
         apply_schema_controls(table, controls, batch_id)
     data_events = events.filter(F.col("control").isNull())
@@ -371,7 +396,6 @@ def apply_batch(
             .agg(
                 F.count("*").alias("winners"),
                 F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deleted"),
-                F.max("offset").alias("off_hi"),
                 F.sum("__n_events").alias("n_events"),
             )
             .collect()
@@ -382,7 +406,6 @@ def apply_batch(
             for r in bucket_stats
         }
     elif merge_mode in ("mor", "mor_dv"):
-        affected = None  # discovered from the written files
         pm = parent_manifest.get("metrics") or {}
         # the parent's per-bucket distribution only transfers if it was
         # recorded under the SAME write layout — after a rebucket start the
@@ -673,35 +696,13 @@ def apply_batch(
             write_gen=write_gen, str_cols=(), kind="dv", with_stats=False,
         )
         new_files += tomb_files
-        _attach_blooms(spark, table.root, new_files, _key1, _key2)
+        bucket_stats = _post_write_stats(spark, table, new_files, fields)
         new_files += dv_files
         for b, frag in tomb_lineage.items():
             lineage.setdefault(b, {"files": [], "rows_live": 0})
             lineage[b]["tombstones"] = frag["rows_live"]
             lineage[b]["files"] = lineage[b]["files"] + frag["files"]
         n_kills = sum(f["rows"] for f in dv_files)
-        row_dirs = [  # skip empty writes (parquet refuses an empty glob)
-            d for d in (data_abs, tomb_abs)
-            if any(e.startswith("__bucket=") for e in os.listdir(d))
-        ]
-        if row_dirs:
-            stats_src = spark.read.parquet(row_dirs[0])
-            for d in row_dirs[1:]:  # separate roots: partition discovery
-                stats_src = stats_src.unionByName(spark.read.parquet(d))
-            bucket_stats = (
-                stats_src
-                .groupBy("__bucket")
-                .agg(
-                    F.count("*").alias("winners"),
-                    F.sum(F.col("_deleted").cast("long")).alias("deleted"),
-                    F.max("_offset").alias("off_hi"),
-                    F.sum("_n_src_events").alias("n_events"),
-                )
-                .collect()
-            )
-        else:
-            bucket_stats = []
-        affected = {r["__bucket"] for r in bucket_stats}
     else:
         # new_data is already hash-partitioned by __bucket (the one
         # shuffle), so partitionBy splits cleanly into one file per bucket
@@ -717,26 +718,7 @@ def apply_batch(
         )
 
         if merge_mode == "mor":
-            _attach_blooms(spark, table.root, new_files, _key1, _key2)
-            # Exact batch stats from the files just written: column-pruned
-            # read of the system columns only (winner rows, ~30 B each) —
-            # orders of magnitude cheaper than a second scan of the raw
-            # batch.
-            if new_files:
-                bucket_stats = (
-                    spark.read.parquet(data_abs)
-                    .groupBy("__bucket")
-                    .agg(
-                        F.count("*").alias("winners"),
-                        F.sum(F.col("_deleted").cast("long")).alias("deleted"),
-                        F.max("_offset").alias("off_hi"),
-                        F.sum("_n_src_events").alias("n_events"),
-                    )
-                    .collect()
-                )
-            else:
-                bucket_stats = []
-            affected = {r["__bucket"] for r in bucket_stats}
+            bucket_stats = _post_write_stats(spark, table, new_files, fields)
 
     n_winners = sum(r["winners"] for r in bucket_stats)
     n_deletes = sum(r["deleted"] or 0 for r in bucket_stats)
@@ -793,6 +775,9 @@ def apply_batch(
             for r in bucket_stats
         },
         "bucket_rows_gen": write_gen,
+        # this call's own wall time up to the commit — what report()
+        # computes throughput from
+        "apply_ms": round((time.perf_counter() - t_start) * 1000, 1),
     }
     snapshot_id = table.commit(
         batch_id=batch_id,
@@ -975,30 +960,10 @@ def compact(
     schema_version = _m_now["schema_version"]
     _key1 = _key1_name(_m_now, schema_version)
     _key2 = _key_name(_m_now, schema_version, 2)
-    new_files: list[dict] = []
-    lineage: dict[str, dict] = {}
-    for entry in sorted(os.listdir(data_abs)):
-        if not entry.startswith("__bucket="):
-            continue
-        b = int(entry.split("=")[1])
-        bdir = os.path.join(data_abs, entry)
-        bfiles, rows = [], 0
-        for fn in sorted(os.listdir(bdir)):
-            if fn.endswith(".parquet"):
-                rel = os.path.join(data_rel, entry, fn)
-                r, fstats = _parquet_meta(
-                    os.path.join(bdir, fn), str_cols=(_key1, _key2)
-                )
-                entry_meta = {
-                    "path": rel, "bucket": b, "schema_version": schema_version,
-                    "rows": r, "layout_gen": write_gen,
-                }
-                if fstats:
-                    entry_meta["stats"] = fstats
-                new_files.append(entry_meta)
-                bfiles.append(rel)
-                rows += r
-        lineage[str(b)] = {"files": bfiles, "rows_live": rows}
+    new_files, lineage = _collect_bucket_entries(
+        data_abs, data_rel, schema_version=schema_version,
+        write_gen=write_gen, str_cols=(_key1, _key2),
+    )
 
     if pinned is not None:
         pinned.unpersist()

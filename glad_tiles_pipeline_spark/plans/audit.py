@@ -145,8 +145,11 @@ def audit_table(
     live_row_files = {
         f["path"] for f in files if f.get("kind") not in ("dv",)
     }
+    # the key halves are field ids 1 and 2, wherever they sit in the list
     key_names_by_ver = {
-        ver: (fields[0]["name"], fields[1]["name"])
+        ver: tuple(
+            next(f["name"] for f in fields if f["id"] == fid) for fid in (1, 2)
+        )
         for ver, fields in m["schemas"].items()
     }
 
@@ -354,7 +357,8 @@ def audit_changelog(spark, changelog_dir: str, sample: int = 5) -> dict:
     if dupes > 0:
         offenders = [
             row["offset"]
-            for row in log.groupBy("offset").count()
+            for row in log.filter(F.col("offset").isNotNull())
+            .groupBy("offset").count()
             .filter(F.col("count") > 1).limit(sample).collect()
         ]
         err("offset_duplicate",

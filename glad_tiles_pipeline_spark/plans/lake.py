@@ -39,6 +39,7 @@ the field-id mapping of the schema version it was written under
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -107,8 +108,19 @@ def _stats_may_match(f: dict, ranges: dict[str, tuple[int, int]]) -> bool:
     return True
 
 
+@functools.lru_cache(maxsize=None)
 def _spark_type(type_str: str) -> T.DataType:
+    # each parse is a JVM round trip (~2 ms); the type vocabulary is tiny
     return T._parse_datatype_string(type_str)
+
+
+def _row_schema(fields: list[dict]) -> T.StructType:
+    """Physical schema of a row file written under ``fields``: the table
+    columns, then the system columns."""
+    return T.StructType(
+        [T.StructField(f["name"], _spark_type(f["type"])) for f in fields]
+        + list(SYSTEM_FIELDS.fields)
+    )
 
 
 class ManifestIO:
@@ -1025,8 +1037,8 @@ class LakeTable:
 
             files = [f for f in files if _path_may_match(f)]
             # S27 bloom pruning: fresh delta/tomb files carry a per-file
-            # key bloom (written by _attach_blooms); a negative membership
-            # test is DEFINITE — the key has no row in the file — so
+            # key bloom (written by merge._post_write_stats); a negative
+            # membership test is DEFINITE — the key has no row in the file — so
             # dropping the file commutes with LWW resolution exactly like
             # the repo-stats prune.  This is what makes lookup O(1) files
             # on an UNCLUSTERED layout (gate: tests/test_bloom_lookup.py);
@@ -1085,7 +1097,7 @@ class LakeTable:
             # Killed rows are superseded by construction (a kill is only
             # recorded when a newer winner beat the row), so applying
             # kills before any remaining LWW pass cannot change winners.
-            kills = spark.read.parquet(
+            kills = spark.read.schema("path string, pos long").parquet(
                 *[os.path.join(self.root, f["path"]) for f in dv_entries]
             ).select(F.col("path").alias("__kp"), F.col("pos").alias("__kpos"))
             out = out.join(
@@ -1142,7 +1154,7 @@ class LakeTable:
 
         norm = F.regexp_replace(F.col("_metadata.file_path"), r"^file:/+", "/")
         return F.regexp_replace(
-            norm, "^" + _re.escape(self.root.rstrip("/")) + "/", ""
+            norm, "^" + _re.escape(os.path.abspath(self.root)) + "/", ""
         )
 
     def _project_files(
@@ -1162,7 +1174,10 @@ class LakeTable:
         ``with_positions`` appends ``__fp`` (root-relative file path) and
         ``__pos`` (row index within the file) from the parquet reader's
         ``_metadata`` column — the row identity positional deletes (S26)
-        are recorded and applied against."""
+        are recorded and applied against.
+
+        Each version's files are read with that version's manifest schema,
+        so planning the read launches no schema-inference job."""
         cur_fields = m["schemas"][str(m["schema_version"])]
         by_version: dict[str, list[str]] = {}
         for f in files:
@@ -1172,7 +1187,7 @@ class LakeTable:
         parts: list[DataFrame] = []
         for ver, paths in by_version.items():
             old_by_id = {f["id"]: f for f in m["schemas"][ver]}
-            df = spark.read.parquet(*paths)
+            df = spark.read.schema(_row_schema(m["schemas"][ver])).parquet(*paths)
             proj = []
             for f in cur_fields:
                 old = old_by_id.get(f["id"])
@@ -1598,16 +1613,15 @@ class LakeTable:
         * ``totals`` — events read/winners/dupes dropped/deletes/
           position kills/control events summed over ingest commits, and
           rows applied/deleted summed from per-bucket lineage.
-        * ``throughput`` — events/sec over the window's commit-timestamp
-          span (None for a single-commit window: one timestamp brackets
-          no interval).
+        * ``events_per_sec`` — events read over ``apply_seconds``, the
+          summed wall time (``metrics.apply_ms``) each ingest commit's
+          ``apply_batch`` call recorded; None when no commit in the
+          window recorded one.
         * ``skew`` — per-ingest-batch hottest-bucket share
           (max bucket_rows / batch events), reported as max and mean:
           ~1/n_buckets means the stats-planned partitioning spread the
           load; →1.0 means one hot key owned the batch.
         """
-        from datetime import datetime, timezone
-
         def _kind(bid: str) -> str:
             if bid.startswith("__"):
                 return "admin"
@@ -1634,7 +1648,7 @@ class LakeTable:
             "control_events": 0, "rows_applied": 0, "rows_deleted": 0,
             "buckets_rewritten": 0,
         }
-        stamps: list[str] = []
+        timed_events, apply_ms = 0, 0.0
         hot_shares: list[float] = []
         for sid in range(lo_sid, cur + 1):
             m = self.manifest(sid)
@@ -1643,8 +1657,6 @@ class LakeTable:
                 continue
             kind = _kind(m["batch_id"])
             kinds[kind] = kinds.get(kind, 0) + 1
-            if m.get("committed_at"):
-                stamps.append(m["committed_at"])
             if kind != "ingest":
                 continue
             met = m.get("metrics") or {}
@@ -1652,6 +1664,9 @@ class LakeTable:
                       "deletes_requested", "position_kills",
                       "control_events", "buckets_rewritten"):
                 totals[k] += int(met.get(k) or 0)
+            if met.get("apply_ms") is not None:
+                timed_events += int(met.get("events_read") or 0)
+                apply_ms += float(met["apply_ms"])
             for lin in (m.get("lineage") or {}).values():
                 totals["rows_applied"] += int(lin.get("rows_applied") or 0)
                 totals["rows_deleted"] += int(lin.get("rows_deleted") or 0)
@@ -1659,24 +1674,16 @@ class LakeTable:
             if rows and sum(rows) > 0:
                 hot_shares.append(max(rows) / sum(rows))
 
-        throughput = None
-        wall = None
-        if len(stamps) >= 2:
-            ts = sorted(
-                datetime.strptime(s, "%Y-%m-%dT%H:%M:%SZ")
-                .replace(tzinfo=timezone.utc)
-                for s in stamps
-            )
-            wall = (ts[-1] - ts[0]).total_seconds()
-            if wall > 0 and totals["events_read"]:
-                throughput = round(totals["events_read"] / wall, 1)
+        throughput = (
+            round(timed_events / (apply_ms / 1000), 1) if apply_ms > 0 else None
+        )
 
         head = self.manifest(cur)
         return {
             "snapshot_range": [lo_sid, cur],
             "snapshots": kinds,
             "totals": totals,
-            "wall_seconds": wall,
+            "apply_seconds": round(apply_ms / 1000, 3) if apply_ms else None,
             "events_per_sec": throughput,
             "skew": (
                 {
@@ -1785,10 +1792,7 @@ class LakeTable:
         ]
         cur_fields = target["schemas"][str(target["schema_version"])]
         key_names = [f["name"] for f in cur_fields if f["id"] in (1, 2)]
-        out_schema = T.StructType(
-            [T.StructField(f["name"], _spark_type(f["type"])) for f in cur_fields]
-            + list(SYSTEM_FIELDS.fields)
-        )
+        out_schema = _row_schema(cur_fields)
         if not added:
             return spark.createDataFrame([], out_schema)
         out = self._project_files(spark, target, added)

@@ -31,6 +31,12 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.files.maxPartitionBytes": "33554432",
     # Keep broadcast threshold at default 10MB; dims here are tiny.
     "spark.sql.autoBroadcastJoinThreshold": str(10 * 1024 * 1024),
+    # Lake reads pass the manifest's explicit file list.  Above the default
+    # threshold of 32 paths Spark stats them in a separate parallel listing
+    # job; on a local file system the driver-side serial stat is cheaper at
+    # every size: 100 explicit files took 720-820 ms with the default and
+    # 56-89 ms serially (4-core VM, local[2]).  Revisit for object stores.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1000000",
     "spark.ui.enabled": "false",
     "spark.driver.memory": "8g",
 }

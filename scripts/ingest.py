@@ -575,8 +575,35 @@ def main(argv: list[str] | None = None) -> int:
     else:
         summary_requeue = None
 
+    # the audit runs BEFORE the irreversible steps (log truncation, the
+    # export clone) so a failing table is neither pruned nor cloned
+    audited = None
+    if args.audit:
+        from glad_tiles_pipeline_spark.plans.audit import audit_table
+
+        audit = audit_table(table)
+        audited = {"ok": audit["ok"], "findings": audit["findings"],
+                   "checked": audit["checked"]}
+        # derived sinks are ordinary lake tables whose manifest claims
+        # readers trust the same way — one --audit covers the whole run's
+        # output surface (the sha spot-check self-gates on tables that
+        # carry content/content_sha, e.g. the SCD2 history)
+        for label, idx in derived_tables:
+            da = audit_table(idx)
+            audited.setdefault("derived", {})[label] = {
+                "ok": da["ok"], "findings": da["findings"],
+                "checked": da["checked"],
+            }
+            audited["ok"] = audited["ok"] and da["ok"]
+    held_back = []
+    if audited is not None and not audited["ok"]:
+        held_back = [flag for flag, on in (
+            ("--prune-changelog", args.prune_changelog),
+            ("--export-to", args.export_to is not None),
+        ) if on]
+
     pruned = None
-    if args.prune_changelog:
+    if args.prune_changelog and not held_back:
         from glad_tiles_pipeline_spark.sources.changelog import (
             prune_changelog,
         )
@@ -586,7 +613,7 @@ def main(argv: list[str] | None = None) -> int:
         pruned = prune_changelog(args.changelog, consumers=consumers)
 
     exported = None
-    if args.export_to is not None:
+    if args.export_to is not None and not held_back:
         # last action: the clone carries everything this run did
         # (ingest, compaction, requeue) plus the resume offsets
         clone = table.export_to(args.export_to)
@@ -631,24 +658,11 @@ def main(argv: list[str] | None = None) -> int:
             ).count()
         except ValueError as e:  # window spans a rewrite (cow/compaction)
             summary["incremental_error"] = str(e)
-    if args.audit:
-        from glad_tiles_pipeline_spark.plans.audit import audit_table
-
-        audit = audit_table(table)
-        summary["audit"] = {"ok": audit["ok"],
-                            "findings": audit["findings"],
-                            "checked": audit["checked"]}
-        # derived sinks are ordinary lake tables whose manifest claims
-        # readers trust the same way — one --audit covers the whole run's
-        # output surface (the sha spot-check self-gates on tables that
-        # carry content/content_sha, e.g. the SCD2 history)
-        for label, idx in derived_tables:
-            da = audit_table(idx)
-            summary["audit"].setdefault("derived", {})[label] = {
-                "ok": da["ok"], "findings": da["findings"],
-                "checked": da["checked"],
-            }
-            summary["audit"]["ok"] = summary["audit"]["ok"] and da["ok"]
+    if audited is not None:
+        summary["audit"] = audited
+    if held_back:
+        # irreversible steps are not run on a table that failed its audit
+        summary["skipped_after_failed_audit"] = held_back
     if args.report:
         rep = table.report(since_snapshot=report_since)
         # derived sinks are ordinary lake tables recording the same

@@ -130,6 +130,22 @@ def test_bloom_false_negative_detected(audited):
         restore()
 
 
+def test_bloom_keys_found_by_field_id(audited):
+    # field order in a schema carries no meaning, only the ids do: with
+    # the key fields listed last the bloom probes must still use them
+    def mutate(m):
+        for fields in m["schemas"].values():
+            fields.sort(key=lambda f: f["id"] in (1, 2))
+
+    restore = _tamper(audited, mutate)
+    try:
+        res = audit_table(audited)
+        assert res["ok"], res["findings"]
+        assert res["checked"]["blooms"] > 0
+    finally:
+        restore()
+
+
 def test_dv_dangling_ref_detected(audited):
     import pyarrow.parquet as pq
 

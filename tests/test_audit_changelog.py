@@ -74,6 +74,22 @@ def test_duplicate_offset_detected(spark, clean_log, tmp_path):
     assert "7" in f["detail"]
 
 
+def test_duplicate_offset_sample_skips_null_offsets(spark, clean_log, tmp_path):
+    bad = _tamper(
+        spark, clean_log, tmp_path,
+        lambda df: df.union(df.filter(F.col("offset") == 7)).withColumn(
+            "offset",
+            F.when(F.col("offset").isin(3, 4), F.lit(None)).otherwise(
+                F.col("offset")
+            ),
+        ),
+    )
+    res = audit_changelog(spark, bad)
+    assert {"offset_null", "offset_duplicate"} <= _codes(res, "error")
+    (f,) = [f for f in res["findings"] if f["code"] == "offset_duplicate"]
+    assert f["detail"].endswith("offsets [7]"), f["detail"]
+
+
 def test_null_offset_detected(spark, clean_log, tmp_path):
     bad = _tamper(
         spark, clean_log, tmp_path,

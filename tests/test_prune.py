@@ -186,3 +186,45 @@ def test_cli_prune_composes(spark, log, tmp_path):
         [l for l in buf2.getvalue().splitlines() if l.startswith("{")][-1]
     )
     assert s2["batches_applied"] == 0
+
+
+def test_cli_failed_audit_holds_back_prune_and_export(spark, log, tmp_path):
+    import io
+    import json
+    import sys
+    from contextlib import redirect_stdout
+
+    import pyarrow.parquet as pq
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(repo, "scripts"))
+    try:
+        from ingest import main as ingest_main
+    finally:
+        sys.path.pop(0)
+
+    table = LakeTable.create(str(tmp_path / "t"), n_buckets=8)
+    ingest_changelog(spark, table, log, batch_size=1000)
+    # corrupt the table: one data file loses a row its manifest counts
+    f = next(f for f in table.manifest(None)["files"] if f["rows"] > 1)
+    full = os.path.join(table.root, f["path"])
+    pq.write_table(pq.read_table(full).slice(1), full)
+
+    dest = str(tmp_path / "clone")
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        rc = ingest_main([
+            "--changelog", log, "--table", table.root, "--batch-size", "1000",
+            "--audit", "--prune-changelog", "--export-to", dest,
+        ])
+    assert rc == 3
+    summary = json.loads(
+        [l for l in buf.getvalue().splitlines() if l.startswith("{")][-1]
+    )
+    assert not summary["audit"]["ok"]
+    assert summary["skipped_after_failed_audit"] == [
+        "--prune-changelog", "--export-to",
+    ]
+    assert "changelog_pruned" not in summary and "exported" not in summary
+    assert len(_parquet_files(log)) == 8
+    assert not os.path.exists(dest)

@@ -157,3 +157,25 @@ def test_cli_report_covers_derived_sinks(spark, run, tmp_path):
     assert sig["head"]["offsets_hi"] == {"default": N - 1}
     # sink events are signature events, not raw changelog events
     assert sig["totals"]["events_read"] > 0
+
+
+def test_throughput_matches_measured_apply_time(spark, run, tmp_path):
+    import time
+
+    from glad_tiles_pipeline_spark.operators.merge import apply_batch
+
+    _, log_dir = run
+    log = spark.read.parquet(log_dir)
+    t = LakeTable.create(str(tmp_path / "t5"), n_buckets=8)
+    measured = 0.0
+    for lo in range(0, N, 2000):
+        hi = lo + 1999
+        events = log.filter(f"offset between {lo} and {hi}")
+        t0 = time.perf_counter()
+        apply_batch(spark, t, events, f"b/s{lo}-{hi}",
+                    offsets={"lo": lo, "hi": hi}, merge_mode="mor")
+        measured += time.perf_counter() - t0
+    rep = t.report()
+    assert rep["totals"]["events_read"] == N
+    assert rep["events_per_sec"] == pytest.approx(N / measured, rel=0.10)
+    assert rep["apply_seconds"] == pytest.approx(measured, rel=0.10)
